@@ -689,10 +689,7 @@ def ivfpq_index(
     if code_mod is None:
         # ivf2_index already resolved the corpus count — reuse the
         # scalar instead of a second count action (guide §1.2)
-        code_mod = auto_code_mod(
-            stats.get("n_rows") if stats.get("n_rows") is not None
-            else emb.count()
-        )
+        code_mod = auto_code_mod(stats["n_rows"])
     # cell id + norm replicate onto the subvector rows and ride the
     # assignment's min_by struct out: the index build pays ZERO
     # corpus-sized joins (was two — onto resid for cent_id, onto the

@@ -7,11 +7,16 @@ Set-at-a-time reimplementation of the reference's per-person loops:
   and the profiled-override chain)
 - affiliate: oit_to_edw/affiliate_job.py:53-105 (stint groups)
 
-Physical shape: ONE shuffle on the entity/position key carries the
+Physical shape: ONE shuffle, on the entity key ``emplid``, carries the
 run-grouping, every per-group window aggregate, the reference-entry
-pick, and the next-group lead; the dept→org and jobcode-defaults dims
-are broadcast left/inner joins.  Unknown-dept rows split into a
-quarantine frame instead of being dropped silently (J1 null branch).
+pick, and the next-group lead.  A hash partitioning on ``emplid``
+already clusters every (emplid, position_nbr, …) window key, and it is
+also the key of the person-level stages downstream (primary election,
+staff-type and visibility rollups, the per-person XML grouping), so
+jobs → person assembly pays one exchange, not a second one keyed on
+emplid alone.  The dept→org and jobcode-defaults dims are broadcast
+left/inner joins.  Unknown-dept rows split into a quarantine frame
+instead of being dropped silently (J1 null branch).
 
 tests/test_reference_fixture_parity.py proves these reproduce the
 reference's own golden ``jobs`` constants for every fixture person.
@@ -41,6 +46,8 @@ def _emp_poi_jobs(
 ) -> tuple[DataFrame, DataFrame]:
     """Shared employee/poi core.  Returns (jobs, dept_quarantine)."""
     order = [F.col(c) for c in order_by]
+    # the one exchange: see the module docstring
+    entries = entries.repartition("emplid")
     g = run_groups(
         entries,
         keys=["emplid", "position_nbr"],

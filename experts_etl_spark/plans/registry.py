@@ -220,16 +220,26 @@ GATE_ORDER = [
     # optimization rounds — every rotation reads as "N dropped" in the
     # round-over-round correctness diff regardless of actual health.
     # Next BUILD round may rotate again; optimization rounds may not.
+    #
+    # One exception, forced by the gate-hygiene invariant (a query whose
+    # body changed since the last snapshot commit must be gated): the
+    # sync-cycle cost cut rebuilt the three jobs transforms' dims as SQL
+    # VALUES, changing employee_jobs_transform, poi_jobs_transform and
+    # affiliate_jobs_transform.  They rotate IN; OUT go three unchanged
+    # r15 returnees whose operators stay gated inside other rows:
+    # dim_lookup_quarantine (J1 lookup + quarantine branch runs in all
+    # three jobs transforms), association_resolution_veto (J7) and
+    # overwrite_child_sets (M5), both inside the gated pub_cycle.
+    "employee_jobs_transform",    # changed: JVM-local dims
+    "poi_jobs_transform",         # changed: JVM-local dims
+    "affiliate_jobs_transform",   # changed: JVM-local dims
     "ann_topk_pq_adc",            # returning: fresh row vs optimized PQ path
-    "association_resolution_veto",  # returning (J7)
     "buffer_archival",            # returning (S8 M3 M9)
     "cascade_delete_children",    # returning (P2 M6)
     "curation_stream_routing",    # returning (routing chain)
     "dedup_ngram_jaccard",        # returning: fresh row vs optimized miner
-    "dim_lookup_quarantine",      # returning (S2 J1)
     "enrichment_left_join",       # returning (J4)
     "merged_uuid_cleanup",        # returning (M7)
-    "overwrite_child_sets",       # returning (M5)
     "owner_reassignment",         # returning (M8)
     "repetition_metrics",         # returning (Gopher expression)
     # --- retained heavyweight composites (green r2-r4) -----------------

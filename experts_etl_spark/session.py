@@ -4,6 +4,27 @@ Local mode (``local[N]``) is a single JVM; ``spark.driver.memory`` is the
 only memory knob.  On a real cluster the same builder works — the configs
 set here (AQE, adaptive coalescing, skew-join handling, Arrow) are the
 scale-relevant ones and are safe at any size.
+
+Two fixed settings cut the per-query cost that does not scale with
+data, which dominates a small sync cycle (measured with two task
+threads on a 4-core host):
+
+- ``spark.sql.codegen.cache.maxEntries`` = 1000.  One cycle of the
+  perfbench ``sync_cycle`` workload (snapshot diff, CDC consume, jobs
+  → assembly → XML render, sinks) generates ~146 distinct classes;
+  Spark's default cache holds 100, so its LRU evicted every class
+  before the next cycle reused it and each warm cycle paid ~156 Janino
+  compiles.  With room for the working set a warm cycle compiles 7.
+  The cache stays bounded, so a long-lived session that keeps building
+  new plans still evicts its oldest.
+- ``spark.python.sql.dataFrameDebugging.enabled`` = false.  With it on,
+  PySpark captures the Python call site on every DataFrame/Column API
+  call: one ``person_cycle_xml`` plan build over the sf0.001 test
+  tables took 5,900-7,000 py4j round trips, and 2,800-3,500 without
+  the capture.  The trade-off: a runtime error (e.g. an ANSI
+  divide-by-zero) still names its error class and the failing
+  expression, but its "called from" line shows a JVM reflection frame
+  instead of the Python ``file:line`` of the API call that built it.
 """
 
 from __future__ import annotations
@@ -48,6 +69,9 @@ def get_spark(
         # and DuckDB's naive TIMESTAMP compares equal.
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # see the module docstring for both
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
     )

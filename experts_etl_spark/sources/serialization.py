@@ -86,24 +86,34 @@ def write_single_xml(
     memory stays bounded by one partition.  Returns the element count.
     NULL ``xml_col`` rows render as an empty line (same contract as the
     distributed twin, so the two writers stay byte-equal).
+
+    The global sort samples its input in one job and shuffles it in
+    another, and each job would otherwise recompute ``df`` (for a
+    rendered person set: the window chain and the XML render).  The
+    projected rows are persisted first, so ``df`` is computed once; the
+    cache is released before returning.
     """
-    ordered = df.orderBy(*order_by).select(
-        F.coalesce(F.col(xml_col), F.lit("")).alias(xml_col)
-    )
-    if batch_partitions:
-        ordered = ordered.coalesce(batch_partitions)
-    n = 0
-    with open(path, "w", encoding="utf-8") as fh:
-        fh.write(header)
-        if not header.endswith("\n"):
-            fh.write("\n")
-        for row in ordered.toLocalIterator(prefetchPartitions=True):
-            fh.write(row[0])
-            fh.write("\n")
-            n += 1
-        fh.write(footer)
-        if not footer.endswith("\n"):
-            fh.write("\n")
+    lines = df.select(
+        *order_by, F.coalesce(F.col(xml_col), F.lit("")).alias("_line")
+    ).persist()
+    try:
+        ordered = lines.orderBy(*order_by).select("_line")
+        if batch_partitions:
+            ordered = ordered.coalesce(batch_partitions)
+        n = 0
+        with open(path, "w", encoding="utf-8") as fh:
+            fh.write(header)
+            if not header.endswith("\n"):
+                fh.write("\n")
+            for row in ordered.toLocalIterator(prefetchPartitions=True):
+                fh.write(row[0])
+                fh.write("\n")
+                n += 1
+            fh.write(footer)
+            if not footer.endswith("\n"):
+                fh.write("\n")
+    finally:
+        lines.unpersist()
     return n
 
 
